@@ -396,3 +396,152 @@ def test_knn_planar_metric_matches_dense_planar_sweep(idx):
                 break
         expect.append(names)
     assert got == expect
+
+
+def _dense_distance(idx, zones, lats, lons, metric):
+    """Per-piece Q5 reference: contains_inclusive over the zone's pieces
+    in rank order, then the dense geom distance helper on the first
+    containing piece."""
+    from tzengine import geom
+
+    measure = {
+        "planar_deg": geom.planar_distance_from_boundary,
+        "geodesic": geom.distance_from_boundary,
+        "geodesic_fixed": geom.distance_from_boundary,
+        "geodesic_freeze": lambda p, r: geom.distance_from_boundary(
+            p, r, freeze=True
+        ),
+    }[metric]
+    out = np.full(len(lats), np.nan)
+    zarr = np.array(zones, dtype=object)
+    for zone in {z for z in zones if z is not None}:
+        pend = np.nonzero(zarr == zone)[0]
+        for rank in [r for r, z in enumerate(idx.zone_ids) if z == zone]:
+            rings = idx.piece_rings(rank)
+            pts = np.stack([lons[pend], lats[pend]], axis=1)
+            inside = geom.contains_inclusive(pts, rings)
+            if inside.any():
+                out[pend[inside]] = measure(pts[inside], rings)
+            pend = pend[~inside]
+    return out
+
+
+def test_distance_batch_matches_dense(idx):
+    """The compiled-index distance kernel (probe containment, zone match,
+    bucket-pruned foot, one batched Vincenty) is bitwise the dense
+    per-piece reference for every metric and mode: random points under
+    their first and their last containing zone, a zone's lower-ranked
+    second piece, float32-grid boundary points, None zones, a name the
+    index lacks and a zone that does not contain the point."""
+    from tzengine import geom
+
+    rng = np.random.default_rng(31)
+    lats = rng.uniform(-63, 63, 240)
+    lons = rng.uniform(-63, 63, 240)
+    # lower-ranked pieces of multi-piece zones (the small triangles):
+    # their centroids, named by the zone
+    multi = [r for r in range(idx.n_pieces)
+             if idx.zone_ids.count(idx.zone_ids[r]) > 1
+             and idx.zone_ids.index(idx.zone_ids[r]) == r]
+    cen = np.array([idx.piece_rings(r)[0].mean(axis=0) for r in multi])
+    # float32-grid boundary points: vertices and snapped edge midpoints
+    stars = [r for r in range(idx.n_pieces)
+             if len(idx.piece_rings(r)[0]) == 64]
+    vr = rng.choice(stars, 60)
+    vtx = np.array([idx.piece_rings(int(r))[0][3] for r in vr])
+    mid = geom.f32(np.array([
+        (idx.piece_rings(int(r))[0][5] + idx.piece_rings(int(r))[0][6]) / 2
+        for r in vr
+    ]))
+    lats = np.concatenate([lats, cen[:, 1], vtx[:, 1], mid[:, 1]])
+    lons = np.concatenate([lons, cen[:, 0], vtx[:, 0], mid[:, 0]])
+    offs, ranks, _valid = probe.probe_ranks(idx, lats, lons, mode="strict")
+    first = [idx.zone_ids[ranks[offs[i]]] for i in range(len(lats))]
+    last = [idx.zone_ids[ranks[offs[i + 1] - 1]] for i in range(len(lats))]
+    n_rand = 240
+    zones = (
+        first[:n_rand // 2] + last[n_rand // 2:n_rand]
+        + [idx.zone_ids[r] for r in multi]
+        + [idx.zone_ids[int(r)] for r in vr] * 2
+    )
+    assert any(first[i] != last[i] for i in range(n_rand // 2, n_rand))
+    zones[0:3] = [None, None, "Zone/Nowhere"]
+    zones[3] = next(z for z in idx.zone_ids if z not in (first[3], last[3])
+                    and z != "Zone/Ocean")
+    n_mid = len(lats) - len(vr)  # snapped midpoints may leave the piece
+    for metric in probe.DISTANCE_METRICS:
+        want = _dense_distance(idx, zones, lats, lons, metric)
+        got = probe.distance_from_boundary_batch(
+            idx, zones, lats, lons, mode="pipeline", metric=metric
+        )
+        assert np.array_equal(got, want, equal_nan=True), metric
+        assert np.isnan(got[:4]).all() and not np.isnan(got[4:n_mid]).any()
+        # strict mode: every named point resolves, None rows stay NaN
+        ok = np.r_[1, 4:len(lats)]
+        ok = ok[(ok == 1) | ~np.isnan(got[ok])]
+        z_ok = [zones[i] for i in ok]
+        strict = probe.distance_from_boundary_batch(
+            idx, z_ok, lats[ok], lons[ok], mode="strict", metric=metric
+        )
+        assert np.array_equal(strict, got[ok], equal_nan=True), metric
+    # the lower-ranked triangle, not the zone's big piece, is measured
+    # (``got`` holds the last metric, planar_deg)
+    k = n_rand
+    for j, r in enumerate(multi):
+        pt = np.array([[lons[k + j], lats[k + j]]])
+        assert got[k + j] == geom.planar_distance_from_boundary(
+            pt, idx.piece_rings(r)
+        )[0]
+    assert (got[k + len(multi):k + len(multi) + len(vr)] == 0.0).all()
+    # strict mode keeps the reference message for an unresolved point,
+    # whether outside its zone or outside the initialized region
+    for bad_zone, bad_lat in (("Zone/Nowhere", 0.0), (first[5], np.nan)):
+        with pytest.raises(
+            ValueError, match="^Location must be inside the time zone$"
+        ):
+            probe.distance_from_boundary_batch(
+                idx, [first[4], bad_zone], np.array([lats[4], bad_lat]),
+                lons[4:6], mode="strict",
+            )
+
+
+def test_nearest_feet_memory_bounded_on_hot_zone(huge):
+    """The foot kernel's bucket prune runs in pair chunks, so its peak
+    allocation does not grow with the number of pairs on one coastline
+    zone (it used to be pairs x buckets: ~1.2 GB at 64k points), and the
+    chunked result is bitwise the single-chunk one."""
+    import tracemalloc
+
+    _pieces, idx_h = huge
+    rank = idx_h.zone_ids.index("Zone/H10x10")
+    lo_lon, lo_lat, hi_lon, hi_lat = idx_h.piece_bbox[rank]
+    rng = np.random.default_rng(4)
+    lon = rng.uniform(lo_lon, hi_lon, 40000)
+    lat = rng.uniform(lo_lat, hi_lat, 40000)
+    offs, ranks, _valid = probe.probe_ranks(idx_h, lat, lon, mode="pipeline")
+    hit = np.nonzero(ranks == rank)[0]
+    pt = np.searchsorted(offs, hit, side="right") - 1
+    lon, lat = lon[pt][:16000], lat[pt][:16000]
+    assert len(lon) == 16000
+    ranks = np.full(16000, rank)
+    # build the per-index segment caches first: they are not per-call
+    probe._nearest_feet_flat(idx_h, lon[:8], lat[:8], ranks[:8])
+    n_segs = int(idx_h.seg_offsets[rank + 1] - idx_h.seg_offsets[rank])
+    assert 2000 * n_segs > probe._nearest_feet_flat.__defaults__[0]
+
+    def peak(n, **kw):
+        tracemalloc.start()
+        try:
+            res = probe._nearest_feet_flat(
+                idx_h, lon[:n], lat[:n], ranks[:n], **kw
+            )
+            return tracemalloc.get_traced_memory()[1], res
+        finally:
+            tracemalloc.stop()
+
+    p2k, r2k = peak(2000)
+    p16k, _ = peak(16000)
+    assert p16k <= 1.5 * p2k, (p2k, p16k)
+    _p, whole = peak(2000, pair_chunk=1 << 62)
+    for a, b in zip(r2k, whole):
+        assert np.array_equal(a, b)

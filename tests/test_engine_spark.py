@@ -187,6 +187,32 @@ def test_distance_and_knn_ops(engine, spark):
     assert knn.collect()[0].nearest_tzids == ["Zone/Filler", "Zone/Big", "Zone/Small"]
 
 
+def test_distance_and_knn_null_outcomes(engine, spark):
+    """Both operators are arrow_udfs: a pipeline-mode distance that does
+    not resolve (hole, wrong zone, None zone, NULL/NaN coordinate) is
+    NULL, not NaN, and kNN on a NULL/NaN/inf coordinate is a NULL list
+    instead of a stalled task."""
+    df = spark.createDataFrame(
+        [
+            (0, "Zone/SquareIsland", 1.3, 1.3),
+            (1, "Zone/SquareIsland", 1.8, 1.4),  # in the hole
+            (2, "Zone/Small", 1.3, 1.3),
+            (3, None, 1.3, 1.3),
+            (4, "Zone/Filler", None, 1.3),
+            (5, "Zone/Filler", float("nan"), 1.3),
+            (6, "Zone/Filler", float("inf"), 1.3),
+        ],
+        "id int, tzid string, lat double, lon double",
+    )
+    rows = sorted(
+        engine.knn_zones(engine.distance_from_boundary(df), k=2).collect()
+    )
+    assert rows[0].boundary_dist_m > 0
+    assert [r.boundary_dist_m for r in rows[1:]] == [None] * 6
+    assert rows[0].nearest_tzids == ["Zone/SquareIsland", "Zone/Filler"]
+    assert [r.nearest_tzids for r in rows[4:]] == [None] * 3
+
+
 def test_artifact_io_error(spark, tmp_path):
     # reference I2: unreadable archive → "Unable to read time zone data
     # resource file" (meta present, data missing)

@@ -404,3 +404,64 @@ def test_nearest_feet_bucket_prune_parity():
         probe.FOOT_PRUNE_MIN_SEGS = old
     for a, b in zip(pruned, full):
         assert np.array_equal(a, b)
+
+
+def test_nearest_feet_total_on_nonfinite_and_empty_pieces():
+    """The foot kernel answers every pair: a non-finite coordinate gives
+    NaN feet and NaN d² (on a piece big enough for the bucket prune, where
+    a NaN bound used to prune every bucket), a piece with no segments NaN
+    feet and +inf d²; finite pairs keep the dense helper's values."""
+    from types import SimpleNamespace
+
+    ang = np.linspace(0.0, 2 * np.pi, 64, endpoint=False)
+    circle = np.stack([np.cos(ang), np.sin(ang)], axis=1)
+    square = np.array([[3.0, 3.0], [3.0, 4.0], [4.0, 4.0], [4.0, 3.0]])
+    seg_a = np.concatenate([circle, square])
+    seg_b = np.concatenate([np.roll(circle, -1, 0), np.roll(square, -1, 0)])
+    fake = SimpleNamespace(
+        seg_a=seg_a, seg_b=seg_b, seg_offsets=np.array([0, 64, 64, 68])
+    )
+    rng = np.random.default_rng(3)
+    lon = np.r_[rng.uniform(-2, 2, 12), np.nan, np.inf, 0.5, -np.inf, 0.1, 3.2]
+    lat = np.r_[rng.uniform(-2, 2, 12), 0.0, 0.5, np.nan, 0.2, 0.1, 3.5]
+    rank = np.r_[np.zeros(12, int), 0, 0, 0, 2, 1, 2]
+    fx, fy, d2 = probe._nearest_feet_flat(fake, lon, lat, rank)
+    assert getattr(fake, "_seg_buckets", None) is not None  # pruned path
+    bad = ~(np.isfinite(lon) & np.isfinite(lat))
+    assert np.isnan(fx[bad]).all() and np.isnan(fy[bad]).all()
+    assert np.isnan(d2[bad]).all()
+    assert np.isnan(fx[16]) and np.isnan(fy[16]) and d2[16] == np.inf
+    rings = {0: [np.r_[circle, circle[:1]]], 2: [np.r_[square, square[:1]]]}
+    for i in np.nonzero(~bad & (rank != 1))[0]:
+        want = geom.nearest_boundary_point(
+            np.array([[lon[i], lat[i]]]), rings[rank[i]]
+        )[0]
+        assert (fx[i], fy[i]) == (want[0], want[1])
+        assert d2[i] == (lon[i] - fx[i]) ** 2 + (lat[i] - fy[i]) ** 2
+
+
+def test_knn_returns_none_for_nonfinite_points():
+    """A NaN/inf coordinate used to spin the kNN round loop forever (its
+    NaN bounds never compare as done); it now gets None before the loop.
+    Run under a bounded wait so a regression fails instead of hanging."""
+    import threading
+
+    lats = np.array([np.nan, np.inf, 4.5, 4.5, -np.inf])
+    lons = np.array([4.5, 4.5, np.nan, 6.5, 1.0])
+    box = {}
+    worker = threading.Thread(
+        target=lambda: box.update(
+            res=probe.knn_zones_batch(EVERYWHERE, lats, lons, k=3)
+        ),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=30)
+    assert not worker.is_alive(), "knn_zones_batch did not return"
+    res = box["res"]
+    assert res[:3] == [None, None, None] and res[4] is None
+    assert res[3] == ["Zone/Filler", "Zone/Big", "Zone/Small"]
+    planar = probe.knn_zones_batch(
+        EVERYWHERE, lats, lons, k=3, metric="planar_deg"
+    )
+    assert planar[:3] == [None, None, None] and planar[4] is None

@@ -4,15 +4,14 @@ The reference's `TimeZoneMap` surface (forEverywhere / forRegion /
 getOverlappingTimeZone(s) / getDistanceFromBoundary / mapVersion /
 timeZones / initializedRegion, TimeZoneMap.kt + TimeZone.kt) re-expressed
 as DataFrame transforms: the compiled covering index is a Spark broadcast
-variable and every query op is a vectorized pandas UDF over Arrow batches
-— no per-row Python (input_hint), no shuffle on the probe side (the whole
-lookup is a broadcast spatial join).
+variable and every query op is a vectorized scalar ``arrow_udf`` over
+Arrow batches — no per-row Python (input_hint), no shuffle on the probe
+side (the whole lookup is a broadcast spatial join).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
@@ -748,26 +747,29 @@ class TzEngine:
         oracle mirrors ("geodesic_fixed" is an alias; "geodesic_freeze"
         opts into the adaptive variant, ~5e-10 m away); ``"planar_deg"``
         = planar degrees (cheap pre-filter). Outside point → error
-        (strict) / null (pipeline)."""
-        if metric not in (
-            "geodesic", "geodesic_fixed", "geodesic_freeze", "planar_deg"
-        ):
+        (strict) / null (pipeline).
+
+        A scalar ``arrow_udf``: zone names, lat and lon cross into
+        Python as Arrow arrays and the kernel runs once per batch
+        (probe.distance_from_boundary_batch). Unresolved rows come back
+        as Arrow nulls — an arrow_udf, unlike a pandas_udf, keeps a NaN
+        as NaN, so the mask is what keeps them NULL."""
+        if metric not in probemod.DISTANCE_METRICS:
             # fail fast driver-side, not as a wrapped executor exception
             raise ValueError(f"unknown metric: {metric!r}")
         bc = self._bc
 
-        @F.pandas_udf(T.DoubleType())
-        def _dist(zone: pd.Series, lat: pd.Series, lon: pd.Series) -> pd.Series:
-            idx = bc.value
+        @F.arrow_udf(T.DoubleType())
+        def _dist(zone: pa.Array, lat: pa.Array, lon: pa.Array) -> pa.Array:
             d = probemod.distance_from_boundary_batch(
-                idx,
-                zone.tolist(),
-                lat.to_numpy(dtype=np.float64),
-                lon.to_numpy(dtype=np.float64),
+                bc.value,
+                zone.to_numpy(zero_copy_only=False),
+                lat.to_numpy(zero_copy_only=False),
+                lon.to_numpy(zero_copy_only=False),
                 mode=mode,
                 metric=metric,
             )
-            return pd.Series(d)
+            return pa.array(d, mask=np.isnan(d))
 
         return df.withColumn(out_col, _dist(F.col(zone_col), F.col(lat_col), F.col(lon_col)))
 
@@ -787,26 +789,28 @@ class TzEngine:
         round 5 the fixed-iteration Vincenty the SQL oracle mirrors;
         "geodesic_fixed" is an alias), "geodesic_freeze" (opt-in
         adaptive variant), or "planar_deg" (planar degrees — bit-exact
-        SQL-oracle-able ordering)."""
-        if metric not in (
-            "geodesic", "geodesic_fixed", "geodesic_freeze", "planar_deg"
-        ):
+        SQL-oracle-able ordering). A row with a NULL or non-finite
+        coordinate gets a NULL list.
+
+        A scalar ``arrow_udf``: lat and lon cross into Python as Arrow
+        arrays, the kernel (probe.knn_zones_batch) runs once per batch
+        and its name lists go back as one Arrow list array."""
+        if metric not in probemod.DISTANCE_METRICS:
             # fail fast driver-side: a typo would otherwise surface as a
             # wrapped executor PythonException on the first batch
             raise ValueError(f"unknown metric: {metric!r}")
         bc = self._bc
 
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def _knn(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            idx = bc.value
+        @F.arrow_udf(T.ArrayType(T.StringType()))
+        def _knn(lat: pa.Array, lon: pa.Array) -> pa.Array:
             res = probemod.knn_zones_batch(
-                idx,
-                lat.to_numpy(dtype=np.float64),
-                lon.to_numpy(dtype=np.float64),
+                bc.value,
+                lat.to_numpy(zero_copy_only=False),
+                lon.to_numpy(zero_copy_only=False),
                 k,
                 metric=metric,
             )
-            return pd.Series(res)
+            return pa.array(res, type=pa.list_(pa.string()))
 
         return df.withColumn(out_col, _knn(F.col(lat_col), F.col(lon_col)))
 
